@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   *
   * The index is read driver-side in one small read (O(files-with-
   * deletes)); payloads are read with exact (offset, length) ranges,
-  * executor-side for the COW scan, distributed for the SELECT
+  * executor-side in GraftBatchScan's readers, distributed for the
   * anti-join. Containers switch array→bitmap at 4096 entries, the
   * roaring break-even.
   */

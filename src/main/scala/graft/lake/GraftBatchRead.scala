@@ -15,17 +15,17 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native executor-side batch read path (DSv2 `Batch` +
-  * `PartitionReaderFactory`), used by the row-level operation rewrites
-  * (MERGE / UPDATE): Spark's ReplaceData planning calls `Scan.toBatch`
-  * directly and does not route through the V1 fallback, so the COW scan
-  * must produce InternalRows on executors itself.
+  * `PartitionReaderFactory`) for every read that must apply merge-on-read
+  * deletes or serve `_file`: SELECTs over a snapshot with pending
+  * position, equality or deletion-vector deletes, `_file` projections,
+  * and the row-level operation rewrites (MERGE / UPDATE / DELETE), whose
+  * ReplaceData planning calls `Scan.toBatch` directly.
   *
-  * Row-based parquet-mr reader over the snapshot's (pruned) file list —
-  * one InputPartition per data file, readers run fully distributed. The
-  * hot SELECT path stays on the V1 bridge (vectorized, codegen); this
-  * reader only feeds rewrites, whose cost is dominated by the write side.
-  * Null-fills columns missing from old files (schema evolution) like the
-  * main read path.
+  * One InputPartition per data file, readers run fully distributed. The
+  * parquet decode is Spark's own reader (vectorized where the schema
+  * allows); each reader skips its file's deleted rows, so no delete side
+  * is ever joined against the data. Null-fills columns missing from old
+  * files (schema evolution) like the vectorized scan.
   */
 /** One equality-delete file a reader must apply: tuples at `path` hold key
   * VALUES over `cols` (physical names); rows of data files with commit
@@ -63,17 +63,14 @@ final class GraftBatchScan(
     store: SnapshotStore,
     required: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter],
-    onRuntimePrune: Seq[DataFile] => Unit = _ => ())
+    onRuntimePrune: Seq[DataFile] => Unit = _ => (),
+    streamLimits: StreamReadLimits = StreamReadLimits())
   extends Scan with Batch with SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
-  // chunk-level (manifest-list) pruning first, then per-file
-  private[lake] lazy val prunedFiles: Seq[DataFile] = {
-    val phys = filters.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-    StatsPruner.prune(store.filesForScan(snapshot, phys), phys,
-      snapshot.partitionSpec)
-  }
+  private lazy val pruning =
+    new ScanPruning(snapshot, store, filters.toIndexedSeq)
+  private[lake] lazy val prunedFiles: Seq[DataFile] = pruning.files
 
   /** File set after runtime (dynamic) filtering — starts at the statically
     * pruned set; `filter()` narrows it before planInputPartitions. */
@@ -98,10 +95,17 @@ final class GraftBatchScan(
     * Spark build one `named_struct(...) IN subquery` filter, which cannot
     * be translated to a connector Predicate and is silently dropped —
     * that, not a planner limitation, is why runtime group filtering
-    * appeared "never injected" with an all-columns filterAttributes. */
+    * appeared "never injected" with an all-columns filterAttributes.
+    *
+    * Reported only when the scan outputs `_file`: Spark's PartitionPruning
+    * rule resolves filter attributes against the relation output and
+    * THROWS on a miss, so a SELECT that joins this scan without
+    * projecting `_file` must not report it. */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"))
+    if (required.fieldNames.contains("_file"))
+      Array(org.apache.spark.sql.connector.expressions.Expressions.column("_file"))
+    else Array.empty
 
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
@@ -111,9 +115,9 @@ final class GraftBatchScan(
       case org.apache.spark.sql.sources.In("_file", _) => true
       case _ => false
     }
-    // `_file` values may arrive in URI form ("file:///x/y", from
-    // input_file_name on the V1 bridge) or raw ("/x/y", from the COW
-    // reader) — normalize BOTH sides before matching. Narrowing to the
+    // `_file` values may arrive in URI form ("file:///x/y", what this
+    // scan's readers emit) or raw ("/x/y", a plain path) — normalize
+    // BOTH sides before matching. Narrowing to the
     // wrong set here loses writes, so if any wanted path fails to resolve
     // to a known snapshot file (a form this normalization doesn't cover),
     // refuse to narrow on that filter and keep the conservative set.
@@ -130,15 +134,15 @@ final class GraftBatchScan(
       if (wanted.exists(w => !knownPaths.contains(w))) fs // unknown form → keep all
       else fs.filter(f => wanted.contains(store.tableDir.resolve(f.path).toString))
     }
-    val narrowed = StatsPruner.prune(afterFile, rest.toIndexedSeq,
-      snapshot.partitionSpec, SchemaNames.renameMap(snapshot.schema))
+    val narrowed = pruning.narrow(afterFile, rest.toIndexedSeq)
     runtimeFiles = narrowed
     onRuntimePrune(narrowed)
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // merge-on-read: each reader must skip its file's deleted rows so COW
-    // rewrites never resurrect them. Position deletes ride in the
+    // merge-on-read: each reader must skip its file's deleted rows, so
+    // SELECTs see only live rows and COW rewrites never resurrect them.
+    // Position deletes ride in the
     // partitions as concrete index arrays while the backlog is small
     // (driver cost capped by graft.cow.driver-tuple-cap); above the cap
     // the readers load their own positions executor-side, pruned by each
@@ -205,11 +209,13 @@ final class GraftBatchScan(
     val dataCols = required.fields.filter(_.name != "_file")
     // source each projected field from the TABLE schema: it carries the
     // rename + default metadata the parquet reader needs (null-fill /
-    // EXISTS_DEFAULT for columns absent from old files)
+    // EXISTS_DEFAULT for columns absent from old files). The type stays
+    // the projected one: nested-column pruning narrows a struct, and the
+    // reader must produce exactly the struct the plan binds to.
     val byName = snapshot.schema.fields.map(f => f.name -> f).toMap
     val physRequired = dataCols.map { rf =>
       val tf = byName.getOrElse(rf.name, rf)
-      tf.copy(name = SchemaNames.physicalName(tf))
+      tf.copy(name = SchemaNames.physicalName(tf), dataType = rf.dataType)
     }
     val present = physRequired.map(_.name).toSet
     val eqCols = snapshot.deleteFiles.filter(_.kind == "equality")
@@ -233,12 +239,15 @@ final class GraftBatchScan(
       snapshot.schema.json, allowColumnar = snapshot.deleteFiles.isEmpty)
   }
 
-  override def estimateStatistics() = new org.apache.spark.sql.connector.read.Statistics {
-    override def sizeInBytes() =
-      java.util.OptionalLong.of(math.max(prunedFiles.map(_.sizeBytes).sum, 1L))
-    override def numRows() =
-      java.util.OptionalLong.of(prunedFiles.map(_.rowCount).sum)
-  }
+  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
+    ScanPruning.statistics(snapshot, prunedFiles)
+
+  /** spark.readStream.table(...): incremental micro-batches over the
+    * snapshot log (offsets = versions). */
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new GraftMicroBatchStream(store, required, checkpointLocation,
+      streamLimits)
 
   override def description(): String =
     s"GraftBatchScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}]"
@@ -364,7 +373,7 @@ private[lake] final class FileColumnAppendingReader(
   private val fileVec = {
     val v = new org.apache.spark.sql.execution.vectorized.ConstantColumnVector(
       1, StringType)
-    v.setUtf8String(UTF8String.fromString(filePath))
+    v.setUtf8String(GraftPartitionReader.fileColumnValue(filePath))
     v
   }
   override def next(): Boolean = inner.next()
@@ -424,7 +433,7 @@ final class GraftPartitionReader(
 
   /** `_file` metadata column: provenance of every row, served from the
     * reader itself — also the join key of runtime group filtering. */
-  private val fileName = UTF8String.fromString(filePath)
+  private val fileName = GraftPartitionReader.fileColumnValue(filePath)
 
   /** Output projection: maps inner-row ordinals to `required` order and
     * splices the `_file` constant. An UnsafeProjection (codegen) gives
@@ -545,6 +554,13 @@ final class GraftPartitionReader(
   override def close(): Unit = inner.close()
 }
 
+private[lake] object GraftPartitionReader {
+  /** The `_file` value of rows read from `filePath`: the data file's URI
+    * (`file:///…`), the form `SELECT _file` has always returned. */
+  def fileColumnValue(filePath: String): UTF8String =
+    UTF8String.fromString(java.nio.file.Paths.get(filePath).toUri.toString)
+}
+
 /** Parquet-mr `Group` → Spark internal value conversion, shared by the COW
   * data reader and the equality-delete tuple loader (both must land in the
   * same value domain for key probing to be exact). */
@@ -554,7 +570,7 @@ private[lake] object GroupReadValues {
     * use reference equality, so wrap them; -0.0 folds to 0.0 so the probe
     * matches Spark's join semantics (NormalizeFloatingNumbers treats them
     * equal, boxed equality does not — a -0.0-keyed row must still die to
-    * a 0.0 delete tuple exactly like on the anti-join read path); NaN is
+    * a 0.0 delete tuple exactly like in the anti-join); NaN is
     * already self-equal for boxed Double/Float. Everything else the
     * internal representations (UTF8String, boxed primitives, Decimal)
     * define value equality for. */

@@ -1,16 +1,14 @@
 package graft.lake
 
-import java.util.{Collections, OptionalLong}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.functions.{coalesce, col, lit, not => fnot}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -18,11 +16,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * DSv2 connector surface (SURVEY.md §2 S1-S11, D6-D13, §3).
   *
   * Read path: DSv2 `ScanBuilder` performs filter+column pushdown and
-  * snapshot-stats file pruning, then delegates the actual parquet IO to
-  * Spark's built-in vectorized parquet source via the `V1Scan` bridge —
-  * the scan executes with the same columnar reader, row-group pruning and
-  * codegen as a plain `spark.read.parquet`, but only over the files this
-  * snapshot + pruning selected. Schema evolution null-fill falls out of
+  * snapshot-stats file pruning ([[ScanPruning]]), then plans one of two
+  * native DSv2 scans over the files this snapshot + pruning selected. A
+  * clean snapshot reads through `GraftVectorScan` — Spark's vectorized
+  * parquet reader, with the same row-group pruning and codegen as a plain
+  * `spark.read.parquet`. Pending merge-on-read deletes and the `_file`
+  * column are served by `GraftBatchScan`, whose executor-side readers
+  * skip deleted rows per file. Schema evolution null-fill falls out of
   * reading with the snapshot's explicit schema.
   *
   * Write path: `V1Write` → staged parquet + stats + atomic snapshot commit
@@ -271,9 +271,10 @@ class GraftTable(
 }
 
 /** DSv2 pushdown: collects filters (for file pruning + re-push into the
-  * delegated parquet read) and the required column subset. We report no
-  * filters as fully pushed, so Spark keeps the Filter node — pruning stays
-  * a pure optimization and correctness never depends on stats. */
+  * parquet read) and the required column subset. Only filters the scan
+  * enforces exactly by file selection are reported as pushed; Spark keeps
+  * a Filter node for the rest, so their pruning stays a pure
+  * optimization and correctness never depends on stats. */
 class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
     streamLimits: StreamReadLimits = StreamReadLimits())
   extends ScanBuilder with SupportsPushDownFilters
@@ -283,6 +284,7 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
 
   private var required: StructType = snapshot.schema
   private var filters: Array[Filter] = Array.empty
+  private var pruning = new ScanPruning(snapshot, store, Seq.empty)
   private var aggPushed: Option[(StructType, Array[Array[Any]])] = None
   private var limit: Option[Int] = None
 
@@ -292,16 +294,12 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
     * "partially pushed" (Spark re-applies the limit; we only shrink the
     * scan), so correctness never depends on it. Refused under pending
     * deletes: file row counts overstate live rows there, and a too-short
-    * prefix would lose rows. Spark only offers the pushdown when nothing
-    * but projections sit between LIMIT and the scan, so the
-    * filters-empty guard is belt-and-suspenders. */
+    * prefix would lose rows. Allowed with no filters, or when EVERY
+    * filter is an exact identity-partition predicate: all rows of every
+    * exactly-selected file match, so a row-count prefix of the MATCHING
+    * files covers the limit. */
   override def pushLimit(l: Int): Boolean = {
-    // allowed with no filters, or when EVERY filter is an exact
-    // identity-partition predicate (pushFilters already vetted them):
-    // all rows of every exactly-selected file match, so a row-count
-    // prefix of the MATCHING files covers the limit
-    val exactOnly = exactIdx.size == filters.length
-    if (exactOnly && snapshot.deleteFiles.isEmpty && l >= 0) {
+    if (pruning.exactOnly && snapshot.deleteFiles.isEmpty && l >= 0) {
       limit = Some(l)
       true
     } else false
@@ -329,14 +327,11 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
     * metadata. Everything else stays residual (Spark re-applies). */
   override def pushFilters(fs: Array[Filter]): Array[Filter] = {
     filters = fs
-    val rename = SchemaNames.renameMap(snapshot.schema)
-    val phys = fs.toIndexedSeq.map(SchemaNames.renameFilter(_, rename))
-    exactIdx = IdentityFilters.exactIndices(phys, snapshot)
-    fs.zipWithIndex.filterNot(p => exactIdx.contains(p._2)).map(_._1)
+    pruning = new ScanPruning(snapshot, store, fs.toIndexedSeq)
+    fs.zipWithIndex.filterNot(p => pruning.exactIdx.contains(p._2)).map(_._1)
   }
-  private var exactIdx: Set[Int] = Set.empty
   override def pushedFilters(): Array[Filter] =
-    filters.zipWithIndex.filter(p => exactIdx.contains(p._2)).map(_._1)
+    filters.zipWithIndex.filter(p => pruning.exactIdx.contains(p._2)).map(_._1)
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     required = requiredSchema
@@ -381,9 +376,7 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
     // identity-partition predicate (then the matching file subset is
     // exact and per-file stats aggregate over it); any residual filter
     // refuses — rows inside files would need scanning.
-    val physAll = filters.toIndexedSeq.map(SchemaNames.renameFilter(_, rename))
-    val exactSet = IdentityFilters.exactIndices(physAll, s)
-    if (exactSet.size != filters.length) return None
+    if (!pruning.exactOnly) return None
     val unfiltered = filters.isEmpty
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[StructField] = e match {
@@ -508,12 +501,9 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
         case _ => return None
       })
 
-    lazy val baseFiles: Seq[DataFile] =
-      if (unfiltered) s.files
-      // chunk-bounds pruning first: the filtered metadata agg on a
-      // sharded table loads only the chunks the filters can touch
-      else store.filesForScan(s, physAll)
-        .filter(df => IdentityFilters.matchesAll(df, physAll, s))
+    // chunk-bounds pruning first: the filtered metadata agg on a sharded
+    // table loads only the chunks the filters can touch
+    lazy val baseFiles: Seq[DataFile] = pruning.files
 
     if (agg.groupByExpressions.isEmpty) {
       aggCells(baseFiles, global = unfiltered).map { out =>
@@ -581,44 +571,32 @@ class GraftScanBuilder(snapshot: Snapshot, store: SnapshotStore,
     // re-checked HERE, after every pushdown phase ran — Spark has been
     // observed offering pushLimit before/despite residual filters, and a
     // prefix under a filter would DROP matching rows in later files.
-    val snapshot0 = limit match {
+    // manifests cleared: the refs describe the FULL list, and every
+    // refs-aware consumer (fileCount, filesForScan) must see only the
+    // truncated files (Snapshot invariant)
+    val scanned = limit match {
       case Some(l) if filters.isEmpty && snapshot.deleteFiles.isEmpty =>
         // chunk-prefix first (sharded tables load only the chunks the
-        // rollups say can be needed), then the exact file prefix.
-        // manifests cleared: the refs describe the FULL list, and every
-        // refs-aware consumer (fileCount, filesForScan) must see only
-        // the truncated files (Snapshot invariant)
+        // rollups say can be needed), then the exact file prefix
         snapshot.copy(files = limitPrefix(store.filesForLimit(snapshot, l), l),
           manifests = Seq.empty)
-      case Some(l) if exactIdx.size == filters.length &&
-          snapshot.deleteFiles.isEmpty =>
+      case Some(l) if pruning.exactOnly && snapshot.deleteFiles.isEmpty =>
         // exact-partition-filtered LIMIT: prefix over the MATCHING files
-        // (every row in them satisfies the claimed filters). Chunk-bounds
-        // pruning first — a sharded table loads only the chunks the
-        // filters can touch, never the full lazy list
-        val rename = SchemaNames.renameMap(snapshot.schema)
-        val exact = filters.toIndexedSeq
-          .map(SchemaNames.renameFilter(_, rename))
-        snapshot.copy(
-          files = limitPrefix(
-            store.filesForScan(snapshot, exact).filter(df =>
-              IdentityFilters.matchesAll(df, exact, snapshot)), l),
+        // (every row in them satisfies the claimed filters)
+        snapshot.copy(files = limitPrefix(pruning.files, l),
           manifests = Seq.empty)
       case _ => snapshot
     }
-    // Vectorized DSv2 path by default; the V1 bridge remains for the
-    // `_file` metadata column (served via input_file_name), for pending
-    // merge-on-read deletes (the anti-join composes at the DataFrame
-    // level), and as an escape hatch (spark.graft.vectorizedReader=false).
-    val wantsFile = required.fieldNames.contains("_file")
-    val vectorized = SparkSession.active.conf
-      .getOption("spark.graft.vectorizedReader").forall(_.toBoolean)
-    if (vectorized && !wantsFile && snapshot.deleteFiles.isEmpty)
-      new GraftVectorScan(snapshot0, store, snapshot0.schema, required,
+    // A clean snapshot without `_file` reads on the vectorized bridge.
+    // Pending merge-on-read deletes (position, equality, deletion vector)
+    // and `_file` provenance are served by GraftBatchScan, whose readers
+    // apply the deletes per file on the executors.
+    if (snapshot.deleteFiles.isEmpty && !required.fieldNames.contains("_file"))
+      new GraftVectorScan(scanned, store, scanned.schema, required,
         filters, streamLimits)
     else
-      new GraftScan(snapshot0, store, snapshot0.schema, required, filters,
-        streamLimits)
+      new GraftBatchScan(scanned, store, required, filters,
+        streamLimits = streamLimits)
   }
 }
 
@@ -673,10 +651,11 @@ final class GraftAggReaderFactory
     }
 }
 
-/** Main read path: native DSv2 Batch over the pruned file set, delegating
-  * the physical IO to Spark's vectorized parquet scan (ParquetScanBridge)
-  * — ColumnarBatches flow straight into WholeStageCodegen with no
-  * Row↔InternalRow conversion. */
+/** Read path of a clean snapshot (no pending deletes, no `_file`): native
+  * DSv2 Batch over the pruned file set, delegating the physical IO to
+  * Spark's vectorized parquet scan (ParquetScanBridge) — ColumnarBatches
+  * flow straight into WholeStageCodegen with no Row↔InternalRow
+  * conversion. */
 class GraftVectorScan(
     private val snapshot: Snapshot,
     private val store: SnapshotStore,
@@ -689,30 +668,9 @@ class GraftVectorScan(
   with org.apache.spark.sql.connector.read.SupportsReportOrdering
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
 
-  // Physically-renamed filters and the vetted exact subset, computed
-  // ONCE per scan — prunedFiles and buildBatch must agree with the
-  // builder's pushed-claim split (same deterministic inputs) or rows
-  // leak past a dropped Filter node.
-  private lazy val physFilters: IndexedSeq[Filter] =
-    filters.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-  private lazy val exactPhysIdx: Set[Int] =
-    IdentityFilters.exactIndices(physFilters, snapshot)
-  private lazy val exactPhys: Seq[Filter] =
-    exactPhysIdx.toSeq.map(physFilters)
-  private lazy val residualPhys: Array[Filter] =
-    physFilters.zipWithIndex
-      .filterNot(p => exactPhysIdx.contains(p._2)).map(_._1).toArray
-
-  // chunk-level (manifest-list) pruning first — only the chunks whose
-  // merged bounds overlap the filters are ever loaded — then per-file,
-  // then EXACT selection for the identity-partition filters the builder
-  // claimed as pushed (no residual Filter re-applies those — correctness
-  // depends on this step, not just performance)
-  private[lake] lazy val prunedFiles: Seq[DataFile] =
-    StatsPruner.prune(store.filesForScan(snapshot, physFilters), physFilters,
-      snapshot.partitionSpec)
-      .filter(df => IdentityFilters.matchesAll(df, exactPhys, snapshot))
+  private lazy val pruning =
+    new ScanPruning(snapshot, store, filters.toIndexedSeq)
+  private[lake] lazy val prunedFiles: Seq[DataFile] = pruning.files
 
   /** Partition-key groups for storage-partitioned joins, when the layout
     * is soundly reportable (see [[Spj.keyed]]). */
@@ -763,9 +721,7 @@ class GraftVectorScan(
     val v1 = org.apache.spark.sql.graftbridge.ColumnBridge
       .predicatesToV1(predicates)
     if (v1.isEmpty) return // untranslatable: keep the conservative set
-    val phys = v1.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-    val kept = StatsPruner.prune(currentFiles, phys, snapshot.partitionSpec)
+    val kept = pruning.narrow(currentFiles, v1.toIndexedSeq)
     runtimePruned = Some(kept.size -> prunedFiles.size)
     runtimeFiles = kept
   }
@@ -846,10 +802,8 @@ class GraftVectorScan(
     val physRequired = StructType(required.fields.map(f =>
       f.copy(name = rename.getOrElse(f.name, f.name))))
     // exact identity-partition filters are enforced by FILE selection
-    // (prunedFiles) and must NOT reach the parquet reader: their column
-    // may be pruned out of the read schema, and parquet record-level
-    // filtering evaluates a missing column as NULL — dropping every row
-    // (residualPhys, shared lazy val above, excludes them)
+    // (prunedFiles) and must not reach the parquet reader
+    val residualPhys = pruning.residual
     def uri(f: DataFile): (String, Long) =
       store.tableDir.resolve(f.path).toUri.toString -> f.sizeBytes
     keyed match {
@@ -895,13 +849,8 @@ class GraftVectorScan(
     new GraftMicroBatchStream(store, required, checkpointLocation,
       streamLimits)
 
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = prunedFiles.map(_.rowCount).sum
-    private val bytes = prunedFiles.map(_.sizeBytes).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-    override def columnStats() = NdvStats.columnStats(snapshot)
-  }
+  override def estimateStatistics(): Statistics =
+    ScanPruning.statistics(snapshot, prunedFiles)
 
   override def description(): String =
     s"GraftVectorScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}]"
@@ -956,115 +905,6 @@ private[lake] final class GraftVectorBatch(
     case _ => false
   }
   override def hashCode(): Int = owner.hashCode()
-}
-
-/** Scan over the pruned file set, bridged to Spark's parquet source. */
-class GraftScan(
-    snapshot: Snapshot,
-    store: SnapshotStore,
-    fullSchema: StructType,
-    required: StructType,
-    filters: Array[Filter],
-    streamLimits: StreamReadLimits = StreamReadLimits())
-  extends V1Scan with SupportsReportStatistics {
-
-  // chunk-level (manifest-list) pruning first, then per-file, then the
-  // EXACT identity-partition selection backing the builder's pushed claim
-  private[lake] lazy val prunedFiles: Seq[DataFile] = {
-    val phys = filters.toIndexedSeq.map(
-      SchemaNames.renameFilter(_, SchemaNames.renameMap(snapshot.schema)))
-    val exact = IdentityFilters.exactIndices(phys, snapshot).toSeq.map(phys)
-    StatsPruner.prune(store.filesForScan(snapshot, phys), phys,
-      snapshot.partitionSpec)
-      .filter(df => IdentityFilters.matchesAll(df, exact, snapshot))
-  }
-
-  override def readSchema(): StructType = required
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftRelation(context, store, snapshot, prunedFiles, fullSchema,
-      required, filters).asInstanceOf[T]
-
-  /** spark.readStream.table(...): incremental micro-batches over the
-    * snapshot log (offsets = versions). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(store, required, checkpointLocation,
-      streamLimits)
-
-  /** Snapshot-resident stats → the optimizer's broadcast decisions see real
-    * sizes without touching the FS (SURVEY.md §4 "snapshot-based stats");
-    * per-column NDV from the merged HLL sketches feeds CBO when present. */
-  override def estimateStatistics(): Statistics = new Statistics {
-    // position deletes remove rows the file counts still include; clamp at
-    // 0 because the tuples may reference files outside the pruned set.
-    // Equality-delete tuples are NOT subtracted: each key kills 0..N rows,
-    // so tuple count is not a row count — matching totalRows' upper-bound
-    // rationale (planner stats only; an overestimate is the safe direction
-    // for broadcast decisions).
-    private val rows = math.max(0L, prunedFiles.map(_.rowCount).sum -
-      snapshot.deleteFiles.filter(_.positional).map(_.rowCount).sum)
-    private val bytes = prunedFiles.map(_.sizeBytes).sum
-    override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
-    override def numRows(): OptionalLong = OptionalLong.of(rows)
-    override def columnStats() = NdvStats.columnStats(snapshot)
-  }
-
-  override def description(): String =
-    s"GraftScan[v${snapshot.version}, files=${prunedFiles.size}/${snapshot.fileCount}]"
-}
-
-/** V1 bridge relation: builds the final RDD by planning a parquet read of
-  * exactly the pruned files with the snapshot's schema (null-fill for
-  * evolved columns), the pushed filters re-applied (→ parquet row-group /
-  * page pruning), and the projection narrowed (→ column pruning). */
-final class GraftRelation(
-    ctx: SQLContext,
-    store: SnapshotStore,
-    snapshot: Snapshot,
-    files: Seq[DataFile],
-    fullSchema: StructType,
-    required: StructType,
-    filters: Array[Filter])
-  extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  /** Snapshot-resident size of the PRUNED file set — without this the V1
-    * relation reports spark.sql.defaultSizeInBytes (8 EiB) and a lake
-    * table can never be chosen as the broadcast side of a join. */
-  override def sizeInBytes: Long = math.max(files.map(_.sizeBytes).sum, 1L)
-
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], required).rdd
-    } else {
-      val paths = files.map(f => store.tableDir.resolve(f.path).toString)
-      val hasDeletes = snapshot.deleteFiles.nonEmpty
-      var df: DataFrame =
-        if (hasDeletes)
-          SchemaNames.readLogicalWithProvenance(spark, fullSchema, paths)
-        else SchemaNames.readLogical(spark, fullSchema, paths)
-      // `_file` metadata column (SupportsMetadataColumns) is served from
-      // the parquet reader's provenance function
-      if (required.fieldNames.contains("_file"))
-        df = df.withColumn("_file", org.apache.spark.sql.functions.input_file_name())
-      FilterTranslate.conjunction(filters.toIndexedSeq).foreach(c => df = df.filter(c))
-      // merge-on-read: subtract position-delete tuples (after the pushed
-      // filters — deletes only ever REMOVE rows, so filtering first is
-      // both safe and cheaper), then drop the provenance columns
-      if (hasDeletes)
-        df = PositionDeletes.applySnapshotDeletes(spark, store, df, snapshot)
-          .drop(PositionDeletes.NameCol, PositionDeletes.RowPosCol)
-      val projected =
-        if (required.isEmpty) df
-        else df.select(required.fieldNames.map(col).toIndexedSeq: _*)
-      projected.rdd
-    }
-  }
 }
 
 /** V1 write bridge: the driver-side InsertableRelation stages parquet and

@@ -62,7 +62,7 @@ object Maintenance {
     * rows; the commit clears `deleteFiles`. The MOR maintenance
     * counterpart of `compact` (Iceberg's `rewrite_position_delete_files` +
     * data rewrite in one): DELETEs stay O(matches) at write time, and this
-    * periodic rewrite keeps the read-side anti-join from growing. Only
+    * periodic rewrite keeps the per-read delete work from growing. Only
     * files actually referenced by a tuple are rewritten. */
   def rewriteDeletes(spark: SparkSession, store: SnapshotStore): Snapshot = {
     val head = store.head().getOrElse(

@@ -1,13 +1,9 @@
 package graft.lake
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
-import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -98,7 +94,7 @@ object MetadataTables {
         new LocalTable(s"$tableName.files", filesSchema, rows)
       case "delete_files" =>
         // pending merge-on-read position-delete files (the rewrite_deletes
-        // dashboard: how much anti-join weight has accumulated)
+        // dashboard: how much delete work every read carries)
         val rows = store.head().toSeq.flatMap(_.deleteFiles).map(f =>
           Row(f.path, f.rowCount, f.sizeBytes, f.kind,
             if (f.equalityColumns.isEmpty) null
@@ -165,7 +161,7 @@ object MetadataTables {
   }
 }
 
-/** Read-only table over driver-local rows (V1Scan bridge). */
+/** Read-only table over driver-local rows (a `LocalScan`). */
 final class LocalTable(tableName: String, tschema: StructType, rows: Seq[Row])
   extends Table with SupportsRead {
 
@@ -178,16 +174,5 @@ final class LocalTable(tableName: String, tschema: StructType, rows: Seq[Row])
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new V1Scan {
-      override def readSchema(): StructType = tschema
-      override def toV1TableScan[T <: BaseRelation with TableScan](
-          context: SQLContext): T =
-        new BaseRelation with TableScan {
-          override def sqlContext: SQLContext = context
-          override def schema: StructType = tschema
-          override def buildScan(): RDD[Row] =
-            context.sparkSession.createDataFrame(
-              rows.asJava, tschema).rdd
-        }.asInstanceOf[T]
-    }
+    () => new LocalRowsScan(tschema, rows)
 }

@@ -11,13 +11,14 @@ import org.apache.spark.sql.types._
   * marked deleted"). A DELETE under `graft.delete-mode = merge-on-read`
   * writes a small parquet file of `(file_path STRING, pos BIGINT)` tuples
   * naming deleted rows by data-file path + 0-based row index, instead of
-  * rewriting the data files (copy-on-write). Readers subtract the tuples
-  * with an anti-join.
+  * rewriting the data files (copy-on-write). Scans skip the named rows per
+  * file (GraftBatchScan); COW DELETE, overwrite, compaction and CDC
+  * subtract the tuples with an anti-join.
   *
   * Scale rationale: deleting 1k rows from a 100 TB table costs one KB-sized
   * delete file and a metadata commit; the COW alternative rewrites every
-  * file containing a match. The read-side anti-join broadcasts the tuple
-  * set while it stays small; `rewrite_deletes` compaction folds tuples back
+  * file containing a match. The anti-join broadcasts the tuple set while
+  * it stays small; `rewrite_deletes` compaction folds tuples back
   * into the data files when they accumulate.
   *
   * Join identity is the data file's NAME (UUID-unique within a table), not
@@ -52,11 +53,9 @@ object PositionDeletes {
   private val BroadcastMaxBytesDefault = 32L * 1024 * 1024
 
   private def broadcastMaxBytes: Long =
-    scala.util.Try(org.apache.spark.sql.SparkSession.active)
-      .toOption
-      .flatMap(_.conf.getOption(BroadcastMaxBytesKey))
-      .map(_.toLong)
-      .getOrElse(BroadcastMaxBytesDefault)
+    scala.util.Try(org.apache.spark.sql.SparkSession.active).toOption
+      .fold(BroadcastMaxBytesDefault)(s => graft.ConfValues.long(
+        s.conf, BroadcastMaxBytesKey, BroadcastMaxBytesDefault))
 
   /** All position-shaped deletes of `deleteFiles` — raw tuple parquet
     * files AND consolidated deletion vectors — as a `(NameCol, RowPosCol)`
@@ -310,18 +309,18 @@ object PositionDeletes {
   }
 
   /** Cap on position-delete tuples the DRIVER may materialize to plan a
-    * COW rewrite scan (session conf `graft.cow.driver-tuple-cap`). At or
-    * below the cap the per-file position arrays ride inside the
-    * InputPartitions — cheapest for the common small-backlog case. Above
-    * it the driver never touches a tuple: each reader loads its own
-    * file's positions executor-side ([[GraftPartitionReader]]), so a
-    * 100 TB table with a huge DELETE backlog plans in O(metadata). */
+    * GraftBatchScan — a merge-on-read SELECT or a COW rewrite (session
+    * conf `graft.cow.driver-tuple-cap`). At or below the cap the per-file
+    * position arrays ride inside the InputPartitions — cheapest for the
+    * common small-backlog case. Above it the driver never touches a
+    * tuple: each reader loads its own file's positions executor-side
+    * ([[GraftPartitionReader]]), so a 100 TB table with a huge DELETE
+    * backlog plans in O(metadata). */
   val DriverTupleCapKey = "graft.cow.driver-tuple-cap"
   val DriverTupleCapDefault = 100000L
 
   def driverTupleCap(spark: SparkSession): Long =
-    spark.conf.getOption(DriverTupleCapKey).map(_.toLong)
-      .getOrElse(DriverTupleCapDefault)
+    graft.ConfValues.long(spark.conf, DriverTupleCapKey, DriverTupleCapDefault)
 
   /** Per-data-file deleted positions (sorted ascending), keyed by file
     * NAME, restricted to `files` — the small-backlog fast path of the COW

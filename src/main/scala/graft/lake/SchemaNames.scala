@@ -50,8 +50,8 @@ object SchemaNames {
   /** Read parquet files under the table's PHYSICAL column names and hand
     * back a DataFrame with the LOGICAL ones (positional rename; a no-op
     * select for never-renamed tables). THE one way to read lake data
-    * files with Spark's reader — every driver-side read path (V1 scan,
-    * delete/overwrite rewrites, compaction) must go through it so a
+    * files with Spark's reader — every driver-side read path (COW
+    * delete/overwrite rewrites, compaction, CDC) must go through it so a
     * change to the rename convention happens in exactly one place. */
   def readLogical(spark: org.apache.spark.sql.SparkSession,
       schema: StructType, paths: Seq[String]): org.apache.spark.sql.DataFrame =

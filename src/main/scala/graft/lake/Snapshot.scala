@@ -52,7 +52,7 @@ final case class DataFile(
 /** One immutable position-delete file (merge-on-read DELETE): a parquet
   * file with columns `(file_path STRING, pos BIGINT)` naming rows of DATA
   * files (by their snapshot-relative path + 0-based row index) that are
-  * deleted as of this snapshot. Readers anti-join these tuples; data files
+  * deleted as of this snapshot. Readers skip these rows; data files
   * themselves are untouched — the Iceberg v2 position-delete design
   * (reference stack: Iceberg 1.4, `README.md:124` "new data files created,
   * old ones marked deleted"). A 100 TB table deleting 100 rows writes one

@@ -225,14 +225,6 @@ object StatsPruner {
         c.filter(f => filters.forall(flt => mightMatch(f, flt, spec)))).flatten
     }
 
-  /** Rename-aware variant: file stats and partition sources are keyed by
-    * PHYSICAL column names, filters arrive with LOGICAL names — translate
-    * first (identity for never-renamed tables). An untranslatable filter
-    * degrades to conservative keep, never a wrong prune. */
-  def prune(files: Seq[DataFile], filters: Seq[Filter],
-      spec: Seq[PartitionField], rename: Map[String, String]): Seq[DataFile] =
-    prune(files, filters.map(SchemaNames.renameFilter(_, rename)), spec)
-
   // ---------- manifest-chunk (manifest-list level) pruning ----------
 
   /** Per-column stats merged over a chunk's files, for the manifest-ref

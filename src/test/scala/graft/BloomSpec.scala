@@ -87,14 +87,15 @@ class BloomSpec extends AnyFunSuite {
     val head = new SnapshotStore(Paths.get(wh, "t", "ren")).head().get
     // blooms stay keyed by the immutable physical name across the rename
     assert(head.files.forall(_.blooms.contains("k")))
-    // rename-aware pruning: filters arrive with the NEW logical name
+    // rename-aware pruning: filters arrive with the NEW logical name and
+    // are translated to the physical one, as every scan does
     val rename = SchemaNames.renameMap(head.schema)
-    val keptPresent = StatsPruner.prune(head.files,
-      Seq(org.apache.spark.sql.sources.EqualTo("kk", "alpha")),
-      head.partitionSpec, rename)
-    val keptAbsent = StatsPruner.prune(head.files,
-      Seq(org.apache.spark.sql.sources.EqualTo("kk", "nope")),
-      head.partitionSpec, rename)
+    def kept(v: String) = StatsPruner.prune(head.files,
+      Seq(SchemaNames.renameFilter(
+        org.apache.spark.sql.sources.EqualTo("kk", v), rename)),
+      head.partitionSpec)
+    val keptPresent = kept("alpha")
+    val keptAbsent = kept("nope")
     assert(keptPresent.nonEmpty)
     assert(keptAbsent.isEmpty, "bloom not consulted after rename")
     assert(spark.sql("SELECT * FROM bl.t.ren WHERE kk = 'alpha'").count() == 1)

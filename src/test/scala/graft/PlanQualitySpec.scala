@@ -113,9 +113,9 @@ class PlanQualitySpec extends SparkSpec {
     spark.sql("DELETE FROM graft.verify.planq_mor WHERE id = 1 OR id = 3")
     val df = spark.table("graft.verify.planq_mor")
     assert(df.collect().map(_.getInt(0)).toSeq == Seq(2))
-    // the anti-join lives INSIDE the V1 bridge's delegated DataFrame (the
-    // outer plan shows only the relation scan) — inspect the same
-    // composition the bridge builds
+    // SELECTs apply these tuples inside GraftBatchScan's readers (pinned
+    // below); this anti-join still serves COW DELETE, partition
+    // overwrite, compaction and CDC — inspect the composition they build
     val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
     val store = new graft.lake.SnapshotStore(
       java.nio.file.Paths.get(wh, "verify", "planq_mor"))
@@ -132,6 +132,44 @@ class PlanQualitySpec extends SparkSpec {
       s"MOR delete application is not broadcast:\n$p")
     assert(!p.matches("(?s).*SortMergeJoin.*LeftAnti.*"),
       s"MOR delete anti-join shuffles the data side:\n$p")
+  }
+
+  test("merge-on-read SELECT applies pending deletes in the scan, with no join") {
+    // position tuples, a deletion vector and an equality delete all
+    // pending at once: the read must stay a single BatchScanExec over
+    // GraftBatchScan (deletes skipped per file in the readers), never an
+    // anti-join of the delete side against the data
+    SparkEntry.queries("q_lake_roundtrip")(spark, sf) // registers the catalog
+    spark.sql("DROP TABLE IF EXISTS graft.verify.planq_mor_select")
+    spark.sql("""CREATE TABLE graft.verify.planq_mor_select (id INT, v INT)
+                 USING graft
+                 TBLPROPERTIES ('graft.delete-mode' = 'merge-on-read')""")
+    spark.sql("""INSERT INTO graft.verify.planq_mor_select
+                 VALUES (1,1),(2,2),(3,3),(4,4),(5,5),(6,6)""")
+    spark.sql("DELETE FROM graft.verify.planq_mor_select WHERE id = 1 OR id = 2")
+    spark.sql("CALL graft.system.rewrite_delete_vectors('verify.planq_mor_select')")
+    spark.sql("DELETE FROM graft.verify.planq_mor_select WHERE id = 3 OR id = 4")
+    spark.sql("DELETE FROM graft.verify.planq_mor_select WHERE id = 5")
+    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    val store = new graft.lake.SnapshotStore(
+      java.nio.file.Paths.get(wh, "verify", "planq_mor_select"))
+    assert(store.head().get.deleteFiles.map(_.kind).toSet ==
+      Set("dv", "position", "equality"), "test setup: all three kinds pending")
+    val df = spark.sql("SELECT id, v FROM graft.verify.planq_mor_select")
+    assert(df.collect().map(_.getInt(0)).toSeq == Seq(6))
+    val exec = df.queryExecution.executedPlan
+    val scans = PlanWalk.deepCollect(exec) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }
+    assert(scans.nonEmpty && scans.forall(_.isInstanceOf[graft.lake.GraftBatchScan]),
+      s"MOR SELECT not served by GraftBatchScan:\n$exec")
+    val joins = PlanWalk.deepCollect(exec) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }
+    assert(joins.isEmpty, s"MOR SELECT joins the delete side:\n$exec")
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("LeftAnti") && !p.contains("Join"),
+      s"MOR SELECT plan carries a join:\n$p")
   }
 
   test("domain mixture keeps the weights dim broadcast and the corpus unshuffled") {
